@@ -11,31 +11,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-# Intermediate cache()s created inside operator builders (the LSH
-# candidate table in verified_jaccard_pairs). They must be releasable:
-# an untracked inner cache survives plans.text.reset_stage_caches()
-# in Spark's CacheManager (canonical-plan match → "already cached"),
-# so a rebuilt pipeline silently reuses it and a "cold" benchmark run
-# measures a half-warm query (~1.4 s vs 3.4 s for minhash_lsh_pairs
-# at sf0.1 — the r5 artifact, same class as VERDICT r3 wrong-item 2).
-_TRANSIENT_CACHES: list[DataFrame] = []
-
-
-def release_transient_caches() -> None:
-    """Unpersist every tracked intermediate cache. Called by
-    plans.text.reset_stage_caches() (benchmark cold-run protocol) and
-    by verified_pairs_stage once its result is materialized (the
-    candidates are only needed to build the pair table; if the pair
-    cache is later evicted, lineage recompute rebuilds them
-    correctly)."""
-    while _TRANSIENT_CACHES:
-        df = _TRANSIENT_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-
-
 def tokens(text_col: str | Column = "text") -> Column:
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.split(c, " ")
@@ -60,12 +35,14 @@ def drop_hot_keys(rows: DataFrame, key: str, max_df: int) -> DataFrame:
     DuckDB oracle says COUNT(DISTINCT doc_id) rely on per-doc
     distinctness of the exploded rows (word_shingles/winnow_selected
     return distinct arrays) — pinned by tests/test_scale_patterns.py::
-    test_hot_count_rewrite_distinctness_premise."""
+    test_hot_count_rewrite_distinctness_premise. NULL keys pass
+    through unchanged, as they did through the anti join (a NULL key
+    never matches the hot-key set)."""
     from pyspark.sql.window import Window as _W
 
     return (
         rows.withColumn("_df", F.count(F.lit(1)).over(_W.partitionBy(key)))
-        .filter(F.col("_df") <= max_df)
+        .filter((F.col("_df") <= max_df) | F.col(key).isNull())
         .drop("_df")
     )
 
@@ -323,8 +300,6 @@ def verified_jaccard_pairs(
     candidates: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
-    unique_docs: bool = True,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) — exact-Jaccard verification of LSH
     candidate pairs, the second half of the production near-dedup
@@ -347,31 +322,15 @@ def verified_jaccard_pairs(
     from ``candidates`` is never checked (that's LSH recall, tuned by
     K/bands).
 
-    ``materialize=False`` (r9, for foreachBatch callers whose upstream
-    band frames are ALREADY persisted): cache the candidate table
-    lazily instead of forcing it with an eager count — the scheduler
-    still computes it once at execution time, but the caller saves one
-    whole Spark job per micro-batch."""
-    # The candidate set feeds two branches (the id semi-join and the
-    # pair join); uncached, Spark recomputes the entire signature
-    # pipeline per branch (measured 2× the whole query). It is a tiny
-    # (long, long) table — cache it. At cluster scale this is the
-    # natural checkpoint between the LSH stage and the verify stage.
-    candidates = candidates.cache()
-    _TRANSIENT_CACHES.append(candidates)
-    if materialize:
-        candidates.count()
+    ``candidates`` feeds two branches (the id semi-join and the pair
+    join); uncached, Spark recomputes its whole lineage per branch
+    (measured 2× the whole query). Callers cache it — at cluster scale
+    the natural checkpoint between the LSH and verify stages — and own
+    its unpersist (plans/text.py::verified_pairs_stage)."""
     cand_ids = candidates.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
     cand_docs = documents.join(cand_ids, "doc_id", "left_semi")
-    if not unique_docs:
-        # r9: callers whose corpus is a replay-window union (batch ∪
-        # stored docs) may hold a doc_id twice; deduping AFTER the
-        # semi-join bounds the shuffle to candidate docs and spares
-        # those callers a full-corpus dropDuplicates per call. Batch
-        # callers with unique corpora keep their shuffle-free plan.
-        cand_docs = cand_docs.dropDuplicates(["doc_id"])
     shingled = word_shingles(cand_docs, n=n)
     return jaccard_pair_join(candidates, shingled, threshold)
 
@@ -530,7 +489,9 @@ def _winnow_batches(k: int, w: int, text_col: str):
             texts = batch.column(text_col).to_pylist()
             n_rows = len(texts)
             n_grams = np.zeros(n_rows, dtype=np.int64)
-            offsets = np.zeros(n_rows + 1, dtype=np.int32)
+            # int64: the int32 cast below raises on overflow, where
+            # numpy int32 offsets would silently wrap
+            offsets = np.zeros(n_rows + 1, dtype=np.int64)
             sel_parts = []
             for r, t in enumerate(texts):
                 toks = t.split(" ") if t is not None else []

@@ -45,8 +45,8 @@ from fintech_lakehouse_spark.functions.text import (
     word_shingles,
 )
 from fintech_lakehouse_spark.functions.vectors import dot, with_norm
-from fintech_lakehouse_spark.plans.registry import register
-from fintech_lakehouse_spark.sources.readers import load_table
+from fintech_lakehouse_spark.plans.registry import register, stage_cache
+from fintech_lakehouse_spark.sources.readers import load_table, table_path
 
 # Winnowing parameters: gram size K tokens, window of W gram hashes.
 # Guarantee: token substrings of length >= K + W - 1 = 8 shared between
@@ -219,8 +219,6 @@ def winnowing_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINNOW_PAIRS_CACHE: dict[tuple, tuple] = {}
-
 # Right-sizing constant for the cached pair view (r16, guide
 # §2.2/§2.6): rows per partition of the coalesced consumer view. The
 # cached aggregate keeps spark.sql.shuffle.partitions partitions
@@ -242,11 +240,10 @@ def winnowing_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     consume the SAME pair set; before this stage each re-evaluated the
     whole scan → winnow → inverted-index → self-join pipeline (52.1 s
     of dup_graph_pagerank's 70.6 s at 1M synthetic docs was this one
-    subtree). Build it once, cache() and materialize, and share — the
-    verified_pairs_stage pattern: at 100 TB this is "write the pair
-    table to storage once per corpus snapshot and point every graph
-    consumer at it". reset_stage_caches() clears it (bench cold-run
-    protocol); production sessions keep the amortization.
+    subtree). :func:`~fintech_lakehouse_spark.plans.registry.stage_cache`
+    builds it once per documents snapshot and owns the cached table —
+    at 100 TB, "write the pair table to storage once per corpus
+    snapshot and point every graph consumer at it".
 
     Consumers receive a size-coalesced VIEW of the cache (r16): the
     materialized count picks ceil(n / PAIRS_PER_PARTITION) partitions,
@@ -255,32 +252,18 @@ def winnowing_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank ran FASTER on 8 cores than 32 — per-task scheduling
     overhead exceeded the per-partition work on every tail
     exchange)."""
-    key = (id(spark), sf_dir)
-    hit = _WINNOW_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit[2]
-    pairs = (
-        winnowing_candidate_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .cache()
+
+    def build(persist):
+        pairs = persist(
+            winnowing_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        )
+        n = pairs.count()  # materialize before consumers branch
+        parts = pairs.rdd.getNumPartitions()
+        return pairs.coalesce(max(1, min(parts, -(-n // PAIRS_PER_PARTITION))))
+
+    return stage_cache(
+        spark, "winnowing_pairs", (table_path(sf_dir, "documents"),), build
     )
-    n = pairs.count()  # materialize before consumers branch
-    target = max(1, min(pairs.rdd.getNumPartitions(), -(-n // PAIRS_PER_PARTITION)))
-    view = pairs.coalesce(target)
-    _WINNOW_PAIRS_CACHE[key] = (spark, pairs, view)
-    return view
-
-
-def reset_winnow_pairs_cache() -> None:
-    """Unpersist and drop the per-snapshot winnowing pair tables
-    (called by plans.text.reset_stage_caches — the one cold-run
-    reset entry point)."""
-    for _, pairs, _view in _WINNOW_PAIRS_CACHE.values():
-        try:
-            pairs.unpersist()
-        except Exception:
-            pass  # session already stopped
-    _WINNOW_PAIRS_CACHE.clear()
 
 
 def _semdedup_oracle_sql() -> str:

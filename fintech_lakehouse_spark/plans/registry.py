@@ -15,6 +15,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, MapType, StructType
 
+from fintech_lakehouse_spark.sources.readers import table_fingerprint
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -72,3 +74,69 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
         return checked
 
     return wrap
+
+
+# The one module-level cache of DataFrames (see stage_cache): key
+# (session id, stage name, input table paths) → (session — held so its
+# id() is never recycled, input fingerprints, frame handed out, frames
+# to unpersist).
+_STAGES: dict[tuple, tuple] = {}
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    for df in frames:
+        try:
+            df.unpersist()
+        except Exception:
+            pass  # session already stopped — nothing to release
+
+
+def stage_cache(
+    spark: SparkSession,
+    name: str,
+    tables: tuple[str, ...],
+    build: Callable[[Callable[[DataFrame], DataFrame]], DataFrame],
+) -> DataFrame:
+    """Build a stage several queries share once per (session, input
+    snapshot) — at 100 TB, "persist the pair table once per corpus
+    snapshot"; the session work-reuse of incremental top-k similarity
+    search (EDBT 2020, PAPERS.md). The entry records each input table's
+    file fingerprint (sources/readers.py::table_fingerprint); when one
+    changes, the entry is unpersisted and rebuilt, so a rewritten table
+    never serves stale results.
+
+    ``build(persist)`` returns the frame to hand out; every frame it
+    passes through ``persist`` is cached, and the entry unpersists it
+    on rebuild and on :func:`reset_stage_caches`."""
+    key = (id(spark), name, tuple(tables))
+    version = tuple(table_fingerprint(t) for t in tables)
+    entry = _STAGES.get(key)
+    if entry is not None:
+        if entry[1] == version:
+            return entry[2]
+        _unpersist(_STAGES.pop(key)[3])
+    owned: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        owned.append(df.cache())
+        return df
+
+    try:
+        result = build(persist)
+    except BaseException:
+        _unpersist(owned)
+        raise
+    _STAGES[key] = (spark, version, result, owned)
+    return result
+
+
+def reset_stage_caches() -> None:
+    """Unpersist and drop every :func:`stage_cache` entry. Benchmarks
+    MUST call this between timed repeats: warm, a minhash_lsh_pairs
+    repeat measures a cache read (~0.1 s), not the shingle → signature
+    → LSH → verify pipeline (~3 s at sf0.1; VERDICT r3 wrong-item 2).
+    Stages free their intermediate caches once built, so afterwards
+    the CacheManager holds nothing a rebuild could silently reuse."""
+    for entry in _STAGES.values():
+        _unpersist(entry[3])
+    _STAGES.clear()

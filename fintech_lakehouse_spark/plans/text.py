@@ -28,8 +28,12 @@ from fintech_lakehouse_spark.functions.text import (
 )
 from fintech_lakehouse_spark.functions.sampling import hash_bucket, sql_hash_bucket
 from fintech_lakehouse_spark.plans._num import davg_int, sql_davg_int, sql_isum
-from fintech_lakehouse_spark.plans.registry import register
-from fintech_lakehouse_spark.sources.readers import load_table
+from fintech_lakehouse_spark.plans.registry import (  # noqa: F401 (re-export)
+    register,
+    reset_stage_caches,
+    stage_cache,
+)
+from fintech_lakehouse_spark.sources.readers import load_table, table_path
 
 
 @register(
@@ -463,91 +467,41 @@ def _simhash_oracle_sql() -> str:
     """
 
 
-# Session-scoped cache of the verified-pairs stage: keyed by
-# (SparkSession, sf_dir); holding the session object keeps its id()
-# from being recycled. Entries are tiny ((long,long,double) rows).
-_VERIFIED_PAIRS_CACHE: dict[tuple, tuple] = {}
-
-
-def reset_stage_caches() -> None:
-    """Unpersist and drop every session-scoped stage cache.
-
-    Benchmarks MUST call this between timed repeats: with the cache
-    warm, a repeat of minhash_lsh_pairs measures a cache read
-    (~0.1 s), not the shingle → signature → LSH → verify pipeline
-    (~3 s at sf0.1) — best-of-N then reports the artifact as the
-    query's cost (VERDICT r3 wrong-item 2). Production consumers
-    (duplicate_clusters, corpus_dedup_survivors in one session) keep
-    the shared cache — only timing protocols need the reset.
-
-    Also releases the builders' TRANSIENT caches
-    (functions.text.release_transient_caches): an inner cache the
-    registry dict doesn't track still matches the rebuilt plan in
-    Spark's CacheManager, so without this a "cold" repeat silently
-    reuses the previous run's LSH candidate table (measured 1.4 s vs
-    3.4 s true-cold minhash at sf0.1 — the r5 bench artifact)."""
-    from fintech_lakehouse_spark.functions.text import (
-        release_transient_caches,
-    )
-
-    for _, pairs in _VERIFIED_PAIRS_CACHE.values():
-        try:
-            pairs.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _VERIFIED_PAIRS_CACHE.clear()
-    release_transient_caches()
-    # the winnowing pair snapshot (plans/curation.py, r9) is the same
-    # stage-cache class — one reset entry point clears them all
-    from fintech_lakehouse_spark.plans.curation import (
-        reset_winnow_pairs_cache,
-    )
-
-    reset_winnow_pairs_cache()
-
-
 def verified_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared shingle → signature → LSH → exact-verify stage.
 
-    Three registered queries (minhash_lsh_pairs, duplicate_clusters,
-    corpus_dedup_survivors) consume the SAME verified pair set
+    Six registered queries (minhash_lsh_pairs, lsh_recall_audit,
+    duplicate_clusters, corpus_dedup_survivors, cluster_safe_split_counts,
+    quality_aware_keepers) consume the SAME verified pair set
     (n=3, K=32, B=8, J≥0.5); before this helper each rebuilt the whole
     pipeline from raw text (~9-11s per query at sf0.01 — VERDICT r2
-    perf item). Build it once per (session, sf_dir), cache() and
-    materialize the result, and share the cached DataFrame — at 100 TB
-    this is "persist the signature/pair table once, build dedup
-    consumers on it", the same checkpoint a production corpus-dedup
-    run writes to storage between the LSH stage and its consumers."""
-    key = (id(spark), sf_dir)
-    hit = _VERIFIED_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    documents = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    signatures = minhash_signatures_md5(shingle_rows(documents, n=3), n_hashes=32)
-    candidates = lsh_band_pairs_md5(signatures, n_hashes=32, n_bands=8)
-    # materialize=False (r16, VERDICT r15 item 3): the candidate cache
-    # stays lazy — `pairs.count()` below is the ONE consumer of the
-    # candidate table here, so the eager candidate count was a whole
-    # extra Spark job on the critical path for nothing (the lazy cache
-    # still computes candidates once inside the count action: cached
-    # partitions are block-locked, so the id semi-join branch and the
-    # pair-join branch share one evaluation). Interleaved min-of-5
-    # A/B on the composed pipeline: 1.620 → 1.342 s at sf0.1.
-    pairs = verified_jaccard_pairs(
-        documents, candidates, n=3, threshold=0.5, materialize=False
-    ).cache()
-    pairs.count()  # materialize before consumers branch (lineage runs once)
-    # the candidate table was only needed to build `pairs` — free it
-    # now (an eviction-triggered recompute of pairs rebuilds it)
-    from fintech_lakehouse_spark.functions.text import (
-        release_transient_caches,
-    )
+    perf item). :func:`~fintech_lakehouse_spark.plans.registry.stage_cache`
+    builds it once per (session, documents snapshot) and owns the
+    cached pair table — the checkpoint a production corpus-dedup run
+    writes to storage between the LSH stage and its consumers."""
 
-    release_transient_caches()
-    _VERIFIED_PAIRS_CACHE[key] = (spark, pairs)
-    return pairs
+    def build(persist):
+        documents = load_table(spark, sf_dir, "documents").repartition(
+            spark.sparkContext.defaultParallelism, "doc_id"
+        )
+        signatures = minhash_signatures_md5(shingle_rows(documents, n=3), n_hashes=32)
+        # The candidates feed two verify branches; cached lazily,
+        # `pairs.count()` computes them once (block-locked partitions)
+        # with no eager candidate job (r16 A/B: 1.620 → 1.342 s at
+        # sf0.1), then they are freed — only `pairs` needs them.
+        candidates = lsh_band_pairs_md5(signatures, n_hashes=32, n_bands=8).cache()
+        try:
+            pairs = persist(
+                verified_jaccard_pairs(documents, candidates, n=3, threshold=0.5)
+            )
+            pairs.count()  # materialize before consumers branch (lineage runs once)
+        finally:
+            candidates.unpersist()
+        return pairs
+
+    return stage_cache(
+        spark, "verified_pairs", (table_path(sf_dir, "documents"),), build
+    )
 
 
 @register(

@@ -126,56 +126,63 @@ def read_orc_to_df(
 
 # Schema catalog for the driver test lake (r15 optimization round):
 # ``spark.read.parquet`` runs schema inference on EVERY call — measured
-# 245 ms per table at sf0.1 vs 37 ms with an explicit schema (the
-# footer read + merge dominates the per-query fixed cost: every bench
-# repeat re-paid it for each of its 1-5 tables). Production engines
-# resolve table schemas from a catalog/metastore once, not per query;
-# this dict is that catalog for the path-addressed test lake. It holds
-# METADATA ONLY (StructType per (path, mtime)) — never rows, plans, or
-# results — so the bench cold-run protocol (reset_stage_caches) is
-# unaffected: every repeat still computes from the parquet inputs.
-# The mtime key invalidates on rewrite (a new file/dir timestamp →
-# fresh inference), matching Spark's own session-level file-index
-# cache semantics. r16 (ADVICE r15): inserting a key EVICTS older
-# entries for the same path (the catalog stays one entry per live
-# table instead of growing per rewrite), and an unstattable path
-# (mtime None) is never cached — a later successful stat must always
-# re-infer. The value carries (schema, estimated scan splits): the
-# split estimate is pure file metadata (sizes + Spark's split-packing
-# arithmetic) used by the conditional scan spread below.
-_SCHEMA_CATALOG: dict[tuple[str, float | None], tuple["StructType", int]] = {}
-
-# Spark's file-split packing constants (spark.sql.files.*): splits ≈
-# ceil((bytes + n_files·openCost) / maxPartitionBytes), floored at 1.
-_MAX_PARTITION_BYTES = 128 << 20
-_OPEN_COST_BYTES = 4 << 20
+# 245 ms per table at sf0.1 vs 37 ms with an explicit schema. Production
+# engines resolve table schemas from a catalog/metastore once, not per
+# query; this dict is that catalog for the path-addressed test lake. It
+# holds METADATA ONLY (a StructType per (path, table_fingerprint)) —
+# never rows, plans, or results — so every bench repeat still computes
+# from the parquet inputs. A rewrite changes the fingerprint, so the
+# stale entry is evicted and the schema re-inferred; an unstattable
+# path is never cached.
+_SCHEMA_CATALOG: dict[tuple[str, tuple[int, int, int]], StructType] = {}
 
 
-def _estimate_scan_splits(path: str) -> int:
-    """Estimated scan-task count for a parquet path from file metadata
-    alone (no Spark job): Spark packs files into splits of
-    maxPartitionBytes, charging openCostInBytes per file. The estimate
-    only feeds a LESS-THAN-CORES comparison, so row-group granularity
-    (which can only reduce effective parallelism further) never flips
-    the decision the wrong way."""
+def table_path(sf_dir: str, name: str) -> str:
+    """The file of one driver test table (TESTDATA.md)."""
+    return f"{sf_dir}/{name}.parquet"
+
+
+def table_fingerprint(path: str) -> tuple[int, int, int] | None:
+    """(file count, total bytes, newest mtime_ns) of a table's data
+    files (``.``/``_``-prefixed files skipped, as Spark does), or None
+    if unstattable — the one walk behind the schema catalog, the split
+    estimate and plans/registry.py::stage_cache."""
     import os as _os
+    import stat as _stat
 
-    total = 0
-    n_files = 0
     try:
-        if _os.path.isfile(path):
-            total, n_files = _os.path.getsize(path), 1
-        else:
-            for dirpath, _dirs, files in _os.walk(path):
-                for f in files:
-                    if f.startswith((".", "_")):
-                        continue
-                    total += _os.path.getsize(_os.path.join(dirpath, f))
-                    n_files += 1
+        st = _os.stat(path)
+        if not _stat.S_ISDIR(st.st_mode):
+            return 1, st.st_size, st.st_mtime_ns
+        n_files = total = newest = 0
+        for dirpath, _dirs, files in _os.walk(path):
+            for f in files:
+                if f.startswith((".", "_")):
+                    continue
+                st = _os.stat(_os.path.join(dirpath, f))
+                n_files += 1
+                total += st.st_size
+                newest = max(newest, st.st_mtime_ns)
     except OSError:
+        return None
+    return n_files, total, newest
+
+
+def _estimate_scan_splits(
+    spark: SparkSession, fingerprint: tuple[int, int, int] | None
+) -> int:
+    """Estimated scan-task count from a table fingerprint (no Spark
+    job): Spark packs files into splits of the session's
+    spark.sql.files.maxPartitionBytes, charging openCostInBytes per
+    file. It only feeds a LESS-THAN-CORES comparison, so row-group
+    granularity (which can only reduce parallelism further) never
+    flips the decision the wrong way."""
+    if fingerprint is None:
         return 1
-    padded = total + n_files * _OPEN_COST_BYTES
-    return max(1, -(-padded // _MAX_PARTITION_BYTES))
+    n_files, total, _newest = fingerprint
+    conf = spark._jsparkSession.sessionState().conf()
+    padded = total + n_files * conf.filesOpenCostInBytes()
+    return max(1, -(-padded // conf.filesMaxPartitionBytes()))
 
 
 def reset_table_schema_catalog() -> None:
@@ -202,9 +209,9 @@ def load_table(
     shingle/gram derivations, partial aggregations, winnowing — ran as
     ONE task on one core (measured 1.10–1.99× whole-query wins across
     ten bench queries from this one change; scripts/r16_spread_ab.py).
-    The condition is pure file metadata (cached in the schema
-    catalog): at production scale the same table has splits ≥ cores
-    and the repartition VANISHES from the plan, so this is layout
+    The condition is pure file metadata read against the session's
+    split settings: at production scale the same table has splits ≥
+    cores and the repartition VANISHES from the plan, so this is layout
     remediation, not a local-mode constant — a real cluster reading a
     few small files gets the same protection. Hash on a provided
     unique key (not round-robin) keeps the exchange deterministic
@@ -234,27 +241,20 @@ def load_table(
         if rule not in rules:
             rules.append(rule)
         spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
-    path = f"{sf_dir}/{name}.parquet"
-    import os as _os
-
-    try:
-        mtime: float | None = _os.path.getmtime(path)
-    except OSError:
-        mtime = None
-    key = (path, mtime)
-    hit = _SCHEMA_CATALOG.get(key) if mtime is not None else None
-    if hit is None:
+    path = table_path(sf_dir, name)
+    fingerprint = table_fingerprint(path)
+    key = (path, fingerprint)
+    schema = _SCHEMA_CATALOG.get(key) if fingerprint is not None else None
+    if schema is None:
         df = spark.read.parquet(path)
-        splits = _estimate_scan_splits(path)
-        if mtime is not None:
+        if fingerprint is not None:
             # evict stale same-path entries before inserting (ADVICE
             # r15: the catalog must not grow per rewrite, and a stale
-            # mtime key must never be served again)
+            # fingerprint key must never be served again)
             for old in [k for k in _SCHEMA_CATALOG if k[0] == path]:
                 del _SCHEMA_CATALOG[old]
-            _SCHEMA_CATALOG[key] = (df.schema, splits)
+            _SCHEMA_CATALOG[key] = df.schema
     else:
-        schema, splits = hit
         df = spark.read.schema(schema).parquet(path)
     if name == "events":
         from pyspark.sql.types import LongType
@@ -279,8 +279,10 @@ def load_table(
                     "THEN 1 ELSE 0 END) AS DECIMAL(20, 0)) / 1000000)"
                 ),
             )
-    if spread is not None and splits < spark.sparkContext.defaultParallelism:
-        df = df.repartition(spark.sparkContext.defaultParallelism, F.col(spread))
+    if spread is not None:
+        cores = spark.sparkContext.defaultParallelism
+        if _estimate_scan_splits(spark, fingerprint) < cores:
+            df = df.repartition(cores, F.col(spread))
     return df
 
 

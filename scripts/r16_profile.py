@@ -204,15 +204,10 @@ def main() -> None:
 
         spark.sparkContext.setJobDescription("mh: candidates")
         timed(spark, "through lsh_band_pairs_md5", cands, repeats)
-        spark.sparkContext.setJobDescription("mh: verify eager")
-        timed(spark, "+ verify (materialize=True)",
+        spark.sparkContext.setJobDescription("mh: verify")
+        timed(spark, "+ verify (uncached candidates)",
               lambda: verified_jaccard_pairs(docs_rep(), cands(), n=3,
-                                             threshold=0.5, materialize=True),
-              repeats)
-        spark.sparkContext.setJobDescription("mh: verify lazy")
-        timed(spark, "+ verify (materialize=False)",
-              lambda: verified_jaccard_pairs(docs_rep(), cands(), n=3,
-                                             threshold=0.5, materialize=False),
+                                             threshold=0.5),
               repeats)
         spark.sparkContext.setJobDescription("mh: full query")
         timed(spark, "minhash_lsh_pairs (query, cold)",

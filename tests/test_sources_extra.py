@@ -471,3 +471,23 @@ def test_schema_catalog_caches_metadata_only(spark, tmp_path):
     assert "n_name" in rewritten.columns and rewritten.count() == 4
     reset_table_schema_catalog()
     assert not _SCHEMA_CATALOG
+
+
+def test_scan_split_estimate_reads_session_conf(spark, sf_dir):
+    """The spread heuristic's split estimate follows the session's
+    spark.sql.files.* settings instead of hard-coded defaults:
+    get_spark's 128 MiB / 4 MiB give one split for a small test-lake
+    file, and a session with a smaller maxPartitionBytes gets a larger
+    estimate."""
+    from fintech_lakehouse_spark.sources.readers import (
+        _estimate_scan_splits,
+        table_fingerprint,
+        table_path,
+    )
+
+    fp = table_fingerprint(table_path(sf_dir, "lineitem"))
+    assert fp is not None and fp[0] == 1
+    assert _estimate_scan_splits(spark, fp) == 1
+    small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
+    assert _estimate_scan_splits(small, fp) > _estimate_scan_splits(spark, fp)

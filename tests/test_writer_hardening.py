@@ -364,12 +364,13 @@ def test_dedup_clusters_releases_per_round_checkpoints(spark):
 
 
 def test_reset_stage_caches_empties_cache_manager(spark):
-    """Bench cold-run protocol (r5 artifact): the LSH candidate table
-    cached INSIDE verified_jaccard_pairs must not survive
-    reset_stage_caches — a leaked inner cache matches the rebuilt
-    plan in Spark's CacheManager and a 'cold' repeat silently reuses
-    it (measured 1.4 s vs 3.4 s true-cold minhash at sf0.1). After
-    reset, the session-wide CacheManager must be EMPTY."""
+    """Bench cold-run protocol (r5 artifact): neither the pair table
+    the stage cache owns nor the LSH candidate table verified_pairs_stage
+    caches while building it may survive reset_stage_caches — a leaked
+    inner cache matches the rebuilt plan in Spark's CacheManager and a
+    'cold' repeat silently reuses it (measured 1.4 s vs 3.4 s
+    true-cold minhash at sf0.1). After reset, the session-wide
+    CacheManager must be EMPTY."""
     from fintech_lakehouse_spark.plans.text import (
         reset_stage_caches,
         verified_pairs_stage,
